@@ -72,11 +72,11 @@ ITERS = int(os.environ.get("SPARK_GRAFT_BENCH_ITERS", "3"))
 
 def time_boatrace(spark) -> float:
     from boatrace_database_spark.gold import race_table
-    from boatrace_database_spark.parse.kernel import parse_txt_files
+    from boatrace_database_spark.parse.kernel import parse_files
     from boatrace_database_spark.silver import silver_tables
 
     t0 = time.perf_counter()
-    parsed = parse_txt_files(spark, BOATRACE_TXT).persist()
+    parsed = parse_files(spark, BOATRACE_TXT).persist()
     t = silver_tables(parsed)
     race = race_table(t["result"], t["env"], t["schedule"])
     n = race.count()
@@ -90,11 +90,11 @@ def time_boatrace_year(spark) -> float:
     """Full 2020: 732 lzh archives -> fused decode+parse -> gold join.
     Reference extrapolation: ~33 s single-threaded (2.75 s/month)."""
     from boatrace_database_spark.gold import race_table
-    from boatrace_database_spark.parse.kernel import parse_lzh_files
+    from boatrace_database_spark.parse.kernel import parse_files
     from boatrace_database_spark.silver import silver_tables
 
     t0 = time.perf_counter()
-    parsed = parse_lzh_files(spark, "/root/reference/lzh/*.lzh").persist()
+    parsed = parse_files(spark, "/root/reference/lzh/*.lzh").persist()
     t = silver_tables(parsed)
     n = race_table(t["result"], t["env"], t["schedule"]).count()
     parsed.unpersist()
@@ -167,28 +167,14 @@ def main() -> None:
 
     timings: dict[str, float] = {}
     if os.path.exists("/root/reference/txt"):
-        from boatrace_database_spark.parse.kernel import (
-            parse_txt_files,
-            parse_txt_files_sectioned,
-        )
+        from boatrace_database_spark.parse.kernel import parse_files
 
-        parse_txt_files(spark, "/root/reference/txt/K200801.TXT").count()
+        parse_files(spark, "/root/reference/txt/K200801.TXT").count()
         # min-of-N like the star-schema queries below: BASELINE.md's
         # reference numbers are steady-state measurements too, and the
         # first run absorbs one-time JVM codegen compilation
         timings["boatrace_month_e2e"] = round(
             min(time_boatrace(spark) for _ in range(ITERS)), 3
-        )
-        # the large-file scale path (split into venue sections, shuffle,
-        # parse per-section) — tracked beside the whole-file kernel so a
-        # regression in either shows up
-        def _sectioned() -> float:
-            t0 = time.perf_counter()
-            parse_txt_files_sectioned(spark, BOATRACE_TXT).count()
-            return time.perf_counter() - t0
-
-        timings["boatrace_month_sectioned"] = round(
-            min(_sectioned() for _ in range(ITERS)), 3
         )
         if os.path.exists("/root/reference/lzh"):
             timings["boatrace_year_from_lzh"] = round(

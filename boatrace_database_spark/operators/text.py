@@ -55,12 +55,6 @@ def digit_ratio(text: Column) -> Column:
     return digits / F.greatest(F.length(text), F.lit(1))
 
 
-def avg_word_len(text: Column) -> Column:
-    toks = tokens(text)
-    total = F.aggregate(toks, F.lit(0), lambda acc, t: acc + F.length(t))
-    return total / F.greatest(F.size(toks), F.lit(1))
-
-
 def quality_score(text: Column) -> Column:
     """Composite [0,1] quality heuristic: long-enough, low digit noise,
     sane stopword density. Deterministic arithmetic (oracle-friendly)."""

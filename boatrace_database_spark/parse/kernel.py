@@ -1,14 +1,14 @@
 """Per-file parse kernel: CP932 lines -> tagged silver rows, one pass.
 
-Re-implements the reference state machine (main.py:126-218) with the
-same observable semantics, but vectorized and single-pass:
+``parse_file`` re-implements the reference state machine
+(main.py:126-218) with the same observable semantics, in one pass:
 
 - the reference scans each K file THREE times (result/env/odds,
-  main.py:249-252); this kernel derives all four tables from one scan
+  main.py:249-252); this kernel derives every table from one scan
   (SURVEY §4 "redundant-scan elimination"),
-- per-line record patterns (schedule/result/env) run as vectorized
-  pandas ``str.extract`` over the whole file at once,
-- only the genuinely sequential parts stay imperative: the section
+- per-line record patterns (schedule/result/env/...) run as plain
+  ``re`` loops behind a cheap substring pretest per line,
+- only the genuinely sequential parts walk line by line: the section
   header lookahead (name at +2 lines, venue at +4 — main.py:139-156)
   and the 10-line odds stanza cursor (main.py:166-185). Both touch a
   handful of lines per race section.
@@ -25,8 +25,13 @@ Faithfulness notes (SURVEY §2.4 is the spec):
 - race_num increments on distance markers (half-width ``H1800m`` in K
   files, full-width in B files) and resets at each section header.
 
-The kernel runs inside Arrow-batched ``mapInPandas`` with one input
-file per group — no shuffle, state never crosses a file boundary.
+One ingest path: ``parse_bytes`` is the only place raw file bytes
+become tagged parsed rows (``sources/bronze.decode_file`` expands
+``.lzh`` archives and decodes CP932, then ``parse_file`` runs per
+day-file). Every reader calls it — the ``binaryFile`` batch scan
+(``parse_files``), the streaming ingest (``parse_binary_df``) and the
+``boatrace`` DataSource — inside Arrow-batched tasks with files as the
+partition unit: no shuffle, state never crosses a file boundary.
 """
 
 from __future__ import annotations
@@ -39,7 +44,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from boatrace_database_spark.parse import patterns as P
-from boatrace_database_spark.sources.bronze import file_meta
+from boatrace_database_spark.sources.bronze import decode_file
 
 PARSED_SCHEMA = T.StructType(
     [
@@ -280,150 +285,44 @@ def parse_file(lines: list[str], kind: str, race_date: str) -> pd.DataFrame:
     return pd.concat(frames, ignore_index=True)
 
 
-def _parse_binary_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """binaryFile rows -> parsed rows. Decode+parse fused: no shuffle."""
+def parse_bytes(path: str, content: bytes) -> Iterator[pd.DataFrame]:
+    """One file's raw bytes -> tagged parsed rows (PARSED_SCHEMA), one
+    frame per day-file: the members of an ``.lzh`` archive, or a TXT
+    file as is."""
+    for name, kind, race_date, lines in decode_file(path, content):
+        out = parse_file(lines, kind, race_date)
+        out.insert(0, "race_date", race_date)
+        out.insert(0, "kind", kind)
+        out.insert(0, "file", name)
+        yield out
+
+
+def _parse_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     for pdf in batches:
         for path, content in zip(pdf["path"], pdf["content"]):
-            name, kind, race_date = file_meta(path)
-            text = bytes(content).decode("cp932", errors="replace")
-            out = parse_file(text.splitlines(), kind, race_date)
-            out.insert(0, "race_date", race_date)
-            out.insert(0, "kind", kind)
-            out.insert(0, "file", name)
-            yield out
-
-
-def parse_txt_files(spark: SparkSession, path_glob: str) -> DataFrame:
-    """One-pass scan: raw TXT files -> tagged parsed rows.
-
-    The scale path: decode and parse fused inside a single
-    ``mapInPandas`` so raw lines never shuffle. The binaryFile source
-    emits one partition per file; daily TXT files are ~160 KB, so the
-    scan is coalesced (narrow, no shuffle) to a few partitions per core
-    — per-task scheduling + Arrow overhead would otherwise dominate on
-    small-file corpora. With large files the coalesce is a no-op.
-    """
-    binary = spark.read.format("binaryFile").load(path_glob).select("path", "content")
-    return parse_binary_df(binary)
+            yield from parse_bytes(path, bytes(content))
 
 
 def parse_binary_df(binary: DataFrame) -> DataFrame:
-    """Fused decode+parse over an existing (path, content) DataFrame —
-    shared by the batch glob reader and the streaming foreachBatch
-    ingest (streaming/ingest.stream_ingest_boatrace)."""
-    # coalesce never increases partition count, so this is a no-op when
-    # the corpus has fewer files than 2x cores
+    """Fused decode+parse over a ``(path, content)`` DataFrame — the
+    batch scan and the streaming foreachBatch ingest
+    (streaming/ingest.stream_ingest_boatrace) both run through it.
+
+    The coalesce (narrow, no shuffle) caps the scan at two partitions
+    per core, so per-task scheduling + Arrow overhead cannot dominate
+    on small-file corpora; it never adds partitions.
+    """
     binary = binary.select("path", "content").coalesce(
         binary.sparkSession.sparkContext.defaultParallelism * 2
     )
-    return binary.mapInPandas(_parse_binary_batches, schema=PARSED_SCHEMA)
+    return binary.mapInPandas(_parse_batches, schema=PARSED_SCHEMA)
 
 
-_SECTION_SCHEMA = (
-    "file STRING, kind STRING, race_date STRING, section_no INT, text STRING"
-)
+def parse_files(spark: SparkSession, path_glob: str) -> DataFrame:
+    """One-pass scan: raw day files -> tagged parsed rows. The glob may
+    match any mix of ``.TXT`` files and ``.lzh`` archives."""
+    return parse_binary_df(spark.read.format("binaryFile").load(path_glob))
 
 
-def _split_section_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """(path, content) -> one row per venue section (NN[KB]BGN marker).
-
-    Narrow pass: decode + line split only; the expensive regex parse
-    happens after sections redistribute across the cluster."""
-    import re
-
-    bgn = re.compile(r"^\d{2}[KB]BGN")
-    for pdf in batches:
-        for path, content in zip(pdf["path"], pdf["content"]):
-            name, kind, race_date = file_meta(path)
-            lines = bytes(content).decode("cp932", errors="replace").splitlines()
-            starts = [i for i, l in enumerate(lines) if bgn.match(l)]
-            if not starts:
-                continue
-            bounds = starts[1:] + [len(lines)]
-            yield pd.DataFrame(
-                {
-                    "file": name,
-                    "kind": kind,
-                    "race_date": race_date,
-                    "section_no": range(len(starts)),
-                    "text": [
-                        "\n".join(lines[a:b]) for a, b in zip(starts, bounds)
-                    ],
-                }
-            )
-
-
-def _parse_section_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        for file, kind, race_date, text in zip(
-            pdf["file"], pdf["kind"], pdf["race_date"], pdf["text"]
-        ):
-            out = parse_file(text.split("\n"), kind, race_date)
-            out.insert(0, "race_date", race_date)
-            out.insert(0, "kind", kind)
-            out.insert(0, "file", file)
-            yield out
-
-
-def parse_txt_files_sectioned(spark: SparkSession, path_glob: str) -> DataFrame:
-    """Large-file scale path (SURVEY §7.4(5)): split each file into its
-    venue sections (``NNKBGN`` markers) in a cheap narrow pass, then
-    redistribute the sections and run the SAME parse kernel per
-    section. Sections are self-contained (every header resets the
-    parse state), so the output is row-identical to
-    ``parse_txt_files`` — asserted on the committed month in
-    tests/test_parse_golden.py. Use when single files are large enough
-    that one-file-one-task would serialize the scan (a multi-GB
-    day-file becomes ~a dozen independent tasks; at 100 TB the split
-    pass streams bytes while the parse pass holds one section each).
-    """
-    binary = spark.read.format("binaryFile").load(path_glob).select("path", "content")
-    sections = binary.mapInPandas(_split_section_batches, schema=_SECTION_SCHEMA)
-    parallelism = spark.sparkContext.defaultParallelism
-    sections = sections.repartition(parallelism, "file", "section_no")
-    return sections.mapInPandas(_parse_section_batches, schema=PARSED_SCHEMA)
-
-
-def _parse_lzh_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """LZH archive bytes -> decode members -> parse. Fused, no shuffle."""
-    from boatrace_database_spark.sources.lzh import read_lzh_bytes
-
-    for pdf in batches:
-        for content in pdf["content"]:
-            for member in read_lzh_bytes(bytes(content)):
-                name, kind, race_date = file_meta(member.filename)
-                text = member.data.decode("cp932", errors="replace")
-                out = parse_file(text.splitlines(), kind, race_date)
-                out.insert(0, "race_date", race_date)
-                out.insert(0, "kind", kind)
-                out.insert(0, "file", name)
-                yield out
-
-
-def parse_lzh_files(spark: SparkSession, path_glob: str) -> DataFrame:
-    """One-pass scan over raw ``.lzh`` archives: decompress (bundled
-    -lh5- decoder) + decode + parse fused in a single ``mapInPandas`` —
-    the full S1->silver path with zero shuffles."""
-    binary = spark.read.format("binaryFile").load(path_glob).select("content")
-    binary = binary.coalesce(spark.sparkContext.defaultParallelism * 2)
-    return binary.mapInPandas(_parse_lzh_batches, schema=PARSED_SCHEMA)
-
-
-def parse_bronze_lines(bronze: DataFrame) -> DataFrame:
-    """Alternate entry: parse an existing bronze lines DataFrame.
-
-    Groups by file (shuffle) — use ``parse_txt_files`` when starting
-    from raw files; this path serves pre-staged bronze tables.
-    """
-
-    def _parse_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("line_no")
-        kind = pdf["kind"].iloc[0]
-        race_date = pdf["race_date"].iloc[0]
-        out = parse_file(pdf["line"].tolist(), kind, race_date)
-        out.insert(0, "race_date", race_date)
-        out.insert(0, "kind", kind)
-        out.insert(0, "file", pdf["file"].iloc[0])
-        return out
-
-    return bronze.groupBy("file").applyInPandas(_parse_group, schema=PARSED_SCHEMA)
+# perfbench/workloads.py looks this name up with getattr at call time
+parse_lzh_files = parse_files

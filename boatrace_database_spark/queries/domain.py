@@ -39,7 +39,7 @@ from pyspark.sql import functions as F
 from boatrace_database_spark import schemas as S
 from boatrace_database_spark.gold import race_table
 from boatrace_database_spark.operators import behavior
-from boatrace_database_spark.parse.kernel import parse_txt_files
+from boatrace_database_spark.parse.kernel import parse_files
 from boatrace_database_spark.silver import silver_tables
 
 REF = "/root/reference"
@@ -57,7 +57,7 @@ def _gold_race(spark: SparkSession) -> DataFrame:
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     if _GOLD_CACHE and _GOLD_CACHE[0][0] is spark:
         return _GOLD_CACHE[0][1]
-    parsed = parse_txt_files(spark, f"{REF}/txt/*2008*.TXT")
+    parsed = parse_files(spark, f"{REF}/txt/*2008*.TXT")
     t = silver_tables(parsed)
     gold = race_table(t["result"], t["env"], t["schedule"]).persist()
     _GOLD_CACHE.clear()

@@ -3,11 +3,9 @@
 The reference stores every column as SQLite TEXT (see SURVEY §1.1;
 reference main.py:104-108 declares header names only). Silver keeps the
 reference's exact Japanese column names and string values for byte
-parity with the committed golden CSVs; typed gold-layer views cast to
-real types and normalize the ``-1`` sentinels to NULL.
-
-Romanized aliases are provided because the driver's DuckDB oracle and
-the star-schema demos are ASCII-only.
+parity with the committed golden CSVs; the typed gold views
+(``gold.py``) cast to real types and normalize the ``-1`` sentinels to
+NULL.
 """
 
 from __future__ import annotations
@@ -29,30 +27,6 @@ ODDS_COLUMNS = [
 ]
 ENV_COLUMNS = [RACE_ID, "天候", "風向", "風速", "波高", "会場"]
 
-# Romanized aliases (same order), used by gold views and the oracle demos.
-SCHEDULE_ALIASES = [
-    "race_id", "lane", "player_id", "player_name", "age", "branch",
-    "weight", "class", "natl_win_rate", "natl_top2_rate",
-    "local_win_rate", "local_top2_rate", "motor_top2_rate", "boat_top2_rate",
-]
-RESULT_ALIASES = ["race_id", "rank", "player_id", "exhibition_time"]
-ODDS_ALIASES = [
-    "race_id", "win", "place1", "place2", "exacta", "quinella",
-    "wide12", "wide13", "wide23", "trifecta", "trio",
-]
-ENV_ALIASES = ["race_id", "weather", "wind_dir", "wind_speed", "wave", "venue"]
-
-
-def _all_string(cols: list[str]) -> T.StructType:
-    return T.StructType([T.StructField(c, T.StringType()) for c in cols])
-
-
-# Silver = reference-parity layer: everything string, like SQLite TEXT.
-SCHEDULE_SCHEMA = _all_string(SCHEDULE_COLUMNS)
-RESULT_SCHEMA = _all_string(RESULT_COLUMNS)
-ODDS_SCHEMA = _all_string(ODDS_COLUMNS)
-ENV_SCHEMA = _all_string(ENV_COLUMNS)
-
 # EXTENSION tables (fields the reference drops — SURVEY §1.2): romanized
 # names directly, no Japanese-parity requirement.
 RESULT_EXT_COLUMNS = [
@@ -72,30 +46,3 @@ BRONZE_LINES_SCHEMA = T.StructType(
         T.StructField("line", T.StringType()),
     ]
 )
-
-# Typed gold-layer types per romanized column (cast targets; SURVEY §1.3).
-GOLD_TYPES = {
-    "lane": T.IntegerType(),
-    "rank": T.IntegerType(),
-    "age": T.IntegerType(),
-    "weight": T.IntegerType(),
-    "wind_speed": T.IntegerType(),
-    "wave": T.IntegerType(),
-    "exhibition_time": T.DoubleType(),
-    "natl_win_rate": T.DoubleType(),
-    "natl_top2_rate": T.DoubleType(),
-    "local_win_rate": T.DoubleType(),
-    "local_top2_rate": T.DoubleType(),
-    "motor_top2_rate": T.DoubleType(),
-    "boat_top2_rate": T.DoubleType(),
-    "win": T.IntegerType(),
-    "place1": T.IntegerType(),
-    "place2": T.IntegerType(),
-    "exacta": T.IntegerType(),
-    "quinella": T.IntegerType(),
-    "wide12": T.IntegerType(),
-    "wide13": T.IntegerType(),
-    "wide23": T.IntegerType(),
-    "trifecta": T.IntegerType(),
-    "trio": T.IntegerType(),
-}

@@ -1,17 +1,15 @@
-"""Bronze layer: raw daily TXT (and LZH) files -> tagged CP932-decoded lines.
+"""Bronze layer: raw day files -> CP932-decoded lines, tagged by file.
 
 Replaces reference main.py:89-100 (decompress) and main.py:137-138
 (per-line cp932 scan). Spark's ``text`` source cannot decode CP932 and
-there is no Hadoop LZH codec, so ingestion reads whole files via the
-``binaryFile`` source and decodes inside an Arrow-batched ``mapInPandas``
-— one task per file group, no shuffle (SURVEY §3 E1: files are the
-natural partition unit; state never crosses a file boundary).
-
-At 100 TB scale this stays correct: ``binaryFile`` splits work per file
-across executors, decode is embarrassingly parallel, and the downstream
-parse kernel groups by file. For very large single files the same
-kernel can run per venue-section (markers ``NNKBGN``/``NNKEND``) — see
-SURVEY §7.4(5).
+there is no Hadoop LZH codec, so every ingest path reads whole files as
+bytes and hands them to ``decode_file``: an ``.lzh`` archive expands to
+its members through the bundled -lh5- decoder, any other file is used
+as is, and each day-file body is decoded once here. The parse kernel
+(``parse/kernel.parse_bytes``) and ``read_lines`` both build on it, so
+a file's bytes become lines the same way on every path. Files are the
+partition unit: state never crosses a file boundary and nothing
+shuffles.
 """
 
 from __future__ import annotations
@@ -24,6 +22,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 from boatrace_database_spark.schemas import BRONZE_LINES_SCHEMA
+from boatrace_database_spark.sources.lzh import read_lzh, read_lzh_bytes
 
 _FILE_RE = re.compile(r"([KBOkbo])(\d{2})(\d{2})(\d{2})\.TXT$", re.IGNORECASE)
 
@@ -42,37 +41,37 @@ def file_meta(path: str) -> tuple[str, str, str]:
     return name, kind, f"20{yy}-{mm}-{dd}"
 
 
-def _decode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+def decode_file(
+    path: str, content: bytes
+) -> Iterator[tuple[str, str, str, list[str]]]:
+    """One file's raw bytes -> ``(file, kind, race_date, lines)`` per
+    day-file: the members of an ``.lzh`` archive, or the file itself."""
+    if path.lower().endswith(".lzh"):
+        members = [(m.filename, m.data) for m in read_lzh_bytes(content)]
+    else:
+        members = [(path, content)]
+    for name, data in members:
+        name, kind, race_date = file_meta(name)
+        yield name, kind, race_date, data.decode("cp932", errors="replace").splitlines()
+
+
+_LINE_COLUMNS = BRONZE_LINES_SCHEMA.fieldNames()
+
+
+def _line_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     for pdf in batches:
-        out = []
         for path, content in zip(pdf["path"], pdf["content"]):
-            name, kind, race_date = file_meta(path)
-            text = bytes(content).decode("cp932", errors="replace")
-            lines = text.splitlines()
-            out.append(
-                pd.DataFrame(
-                    {
-                        "file": name,
-                        "kind": kind,
-                        "race_date": race_date,
-                        "line_no": range(len(lines)),
-                        "line": lines,
-                    }
-                )
-            )
-        yield pd.concat(out) if out else pd.DataFrame(
-            columns=["file", "kind", "race_date", "line_no", "line"]
-        )
+            for name, kind, race_date, lines in decode_file(path, bytes(content)):
+                values = (name, kind, race_date, range(len(lines)), lines)
+                yield pd.DataFrame(dict(zip(_LINE_COLUMNS, values)))
 
 
-def read_txt_lines(spark: SparkSession, path_glob: str) -> DataFrame:
-    """Read raw TXT files into the bronze lines DataFrame.
-
-    ``path_glob`` e.g. ``/root/reference/txt/*2008*.TXT``. One input file
-    becomes one partition-local group; no shuffle happens here.
-    """
+def read_lines(spark: SparkSession, path_glob: str) -> DataFrame:
+    """Bronze lines DataFrame from any mix of TXT files and ``.lzh``
+    archives, e.g. ``/root/reference/txt/*2008*.TXT``. One input file
+    becomes one partition-local group; no shuffle happens here."""
     binary = spark.read.format("binaryFile").load(path_glob).select("path", "content")
-    return binary.mapInPandas(_decode_batches, schema=BRONZE_LINES_SCHEMA)
+    return binary.mapInPandas(_line_batches, schema=BRONZE_LINES_SCHEMA)
 
 
 def decompress_lzh_to_dir(
@@ -86,8 +85,6 @@ def decompress_lzh_to_dir(
     ``txt/`` corpus is LF; ``normalize_newlines`` (default) reproduces
     the committed bytes.
     """
-    from boatrace_database_spark.sources.lzh import read_lzh
-
     os.makedirs(out_dir, exist_ok=True)
     written: list[str] = []
     for path in lzh_paths:
@@ -100,36 +97,3 @@ def decompress_lzh_to_dir(
                 fh.write(data)
             written.append(target)
     return written
-
-
-def read_lzh_txt_lines(spark: SparkSession, path_glob: str) -> DataFrame:
-    """Bronze directly from ``.lzh`` archives: binaryFile scan ->
-    in-memory -lh5- decode -> CP932 lines. Fully cluster-side S2+S3;
-    one archive per task group, no shuffle."""
-    from boatrace_database_spark.sources.lzh import read_lzh_bytes
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = []
-            for content in pdf["content"]:
-                for member in read_lzh_bytes(bytes(content)):
-                    name, kind, race_date = file_meta(member.filename)
-                    text = member.data.decode("cp932", errors="replace")
-                    lines = text.splitlines()
-                    out.append(
-                        pd.DataFrame(
-                            {
-                                "file": name,
-                                "kind": kind,
-                                "race_date": race_date,
-                                "line_no": range(len(lines)),
-                                "line": lines,
-                            }
-                        )
-                    )
-            yield pd.concat(out) if out else pd.DataFrame(
-                columns=["file", "kind", "race_date", "line_no", "line"]
-            )
-
-    binary = spark.read.format("binaryFile").load(path_glob).select("content")
-    return binary.mapInPandas(batches, schema=BRONZE_LINES_SCHEMA)

@@ -1,28 +1,22 @@
 """Pluggable Spark 4 Python Data Source for the reference's raw
-formats: ``spark.read.format("boatrace").load(glob)`` scans daily
-``K/B*.TXT`` result/schedule files — or whole ``.lzh`` archives,
-decompressed by the bundled -lh5- decoder — and emits the engine's
-tagged parsed-row schema (parse/kernel.PARSED_SCHEMA) without the
-caller touching binaryFile or mapInPandas.
+formats: ``spark.read.format("boatrace").load(glob)`` reads daily
+``K/B*.TXT`` files and ``.lzh`` archives (any mix) and emits the
+engine's tagged parsed-row schema (``parse/kernel.PARSED_SCHEMA``).
 
-Why a Data Source and not just `parse_txt_files`: the DataSourceV2
-contract makes the format a first-class catalog citizen — usable from
-pure SQL (`CREATE TEMPORARY VIEW r USING boatrace OPTIONS (path ...)`),
-from any session that registered it, and with planning-time control of
-the file→task packing (the small-file coalesce the helper had to bolt
-on after the scan). Same fused decode+parse hot path: each task opens
-its files, decodes CP932, runs the vectorized kernel, and ships Arrow
-RecordBatches to the JVM — raw lines never shuffle, Python touches
-each byte once.
+It is the SQL face of the one ingest path, not a second one: each task
+reads its files and hands the bytes to ``parse/kernel.parse_bytes``,
+the same function the ``binaryFile`` scan (``parse_files``) and the
+streaming ingest run. What the DataSourceV2 contract adds is catalog
+citizenship — the format is usable from pure SQL (``CREATE TEMPORARY
+VIEW r USING boatrace OPTIONS (path ...)``) in any session that
+registered it.
 
 Registration is per-session: ``register(spark)`` (idempotent).
 
-Scale notes: file listing happens once at planning time on the driver
+Packing: file listing happens once at planning time on the driver
 (exactly like Spark's built-in file sources); executors must see the
-same filesystem (shared/posix/object storage). ``files_per_task``
-(default 16) is the packing dial — raise it for tiny daily files,
-lower it for month archives; a 1000-executor cluster wants
-len(files)/files_per_task comfortably above total cores.
+same filesystem. ``files_per_task`` (default 16) sets how many files
+one task reads.
 """
 
 from __future__ import annotations
@@ -35,11 +29,11 @@ from pyspark.sql.datasource import (
     DataSourceReader,
     InputPartition,
 )
+from pyspark.sql.pandas.types import to_arrow_schema
 
-_DDL = (
-    "file string, kind string, race_date string, "
-    "table string, race_id string, vals array<string>"
-)
+from boatrace_database_spark.parse.kernel import PARSED_SCHEMA, parse_bytes
+
+_ARROW_SCHEMA = to_arrow_schema(PARSED_SCHEMA)
 
 
 class _FilesPartition(InputPartition):
@@ -67,47 +61,15 @@ class BoatraceReader(DataSourceReader):
         ]
 
     def read(self, partition: _FilesPartition) -> Iterator:
-        # imports inside read(): this object is pickled to executors,
-        # keep it free of JVM/session state
         import pyarrow as pa
 
-        from boatrace_database_spark.parse.kernel import parse_file
-        from boatrace_database_spark.sources.bronze import file_meta
-        from boatrace_database_spark.sources.lzh import read_lzh_bytes
-
-        arrow_schema = pa.schema(
-            [
-                ("file", pa.string()),
-                ("kind", pa.string()),
-                ("race_date", pa.string()),
-                ("table", pa.string()),
-                ("race_id", pa.string()),
-                ("vals", pa.list_(pa.string())),
-            ]
-        )
-
-        def emit(name: str, raw: bytes):
-            _, kind, race_date = file_meta(name)
-            text = raw.decode("cp932", errors="replace")
-            out = parse_file(text.splitlines(), kind, race_date)
-            out.insert(0, "race_date", race_date)
-            out.insert(0, "kind", kind)
-            out.insert(0, "file", name)
-            return pa.RecordBatch.from_pandas(
-                out, schema=arrow_schema, preserve_index=False
-            )
-
         for path in partition.paths:
-            if path.lower().endswith(".lzh"):
-                with open(path, "rb") as fh:
-                    data = fh.read()
-                for member in read_lzh_bytes(data):
-                    yield emit(member.filename, member.data)
-            else:
-                import os
-
-                with open(path, "rb") as fh:
-                    yield emit(os.path.basename(path), fh.read())
+            with open(path, "rb") as fh:
+                content = fh.read()
+            for out in parse_bytes(path, content):
+                yield pa.RecordBatch.from_pandas(
+                    out, schema=_ARROW_SCHEMA, preserve_index=False
+                )
 
 
 class BoatraceDataSource(DataSource):
@@ -115,8 +77,8 @@ class BoatraceDataSource(DataSource):
     def name(cls) -> str:
         return "boatrace"
 
-    def schema(self) -> str:
-        return _DDL
+    def schema(self):
+        return PARSED_SCHEMA
 
     def reader(self, schema) -> BoatraceReader:
         return BoatraceReader(self.options)

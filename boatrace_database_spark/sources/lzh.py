@@ -11,9 +11,9 @@ literal/length table, and the 14-symbol distance table per block).
 Correctness is golden-tested: decompressing the committed archives
 must reproduce the committed ``txt/`` files byte-for-byte.
 
-Driver-side by design (archives are fetched one per day by the
-throttled downloader); cluster-side use wraps `decompress_member` in
-the same mapInPandas pattern as the parse kernel.
+``read_lzh`` serves driver-side expansion (``bronze.decompress_lzh_to_dir``);
+cluster-side, every ingest path expands archives in memory through
+``read_lzh_bytes`` inside ``bronze.decode_file``.
 """
 
 from __future__ import annotations

@@ -54,11 +54,11 @@ def build_corpus() -> int:
 
 def run_e2e(spark, glob: str) -> tuple[float, int]:
     from boatrace_database_spark.gold import race_table
-    from boatrace_database_spark.parse.kernel import parse_txt_files
+    from boatrace_database_spark.parse.kernel import parse_files
     from boatrace_database_spark.silver import silver_tables
 
     t0 = time.perf_counter()
-    parsed = parse_txt_files(spark, glob).persist()
+    parsed = parse_files(spark, glob).persist()
     t = silver_tables(parsed)
     n = race_table(t["result"], t["env"], t["schedule"]).count()
     dt = time.perf_counter() - t0
@@ -95,20 +95,6 @@ def main() -> None:
     print(f"{REPLICAS}x: {nN} race rows in {dtN:.2f}s  balance={bal}",
           file=sys.stderr)
 
-    # the large-file scale path: section split + redistribute + parse
-    from boatrace_database_spark.parse.kernel import parse_txt_files_sectioned
-
-    before = stage_ids(spark)
-    t0 = time.perf_counter()
-    n_sec = parse_txt_files_sectioned(spark, f"{DST}/*.TXT").count()
-    dt_sec = time.perf_counter() - t0
-    bal_sec = task_balance(spark, stage_ids(spark) - before)
-    print(
-        f"{REPLICAS}x sectioned: {n_sec} parsed rows in {dt_sec:.2f}s  "
-        f"balance={bal_sec}",
-        file=sys.stderr,
-    )
-
     out = {
         "metric": "scale_parse_e2e",
         "replicas": REPLICAS,
@@ -123,9 +109,6 @@ def main() -> None:
         "mb_per_sec_Nx": round(corpus_mb * REPLICAS / dtN, 1),
         "scale_efficiency": round((nN / dtN) / (n1 / dt1), 2),
         "task_balance": bal,
-        "sectioned_sec_Nx": round(dt_sec, 2),
-        "sectioned_rows_Nx": n_sec,
-        "sectioned_task_balance": bal_sec,
     }
     print(json.dumps(out))
 

@@ -7,17 +7,17 @@ from __future__ import annotations
 import pytest
 
 from boatrace_database_spark.parse.dataframe_parse import silver_tables_df
-from boatrace_database_spark.parse.kernel import parse_txt_files
+from boatrace_database_spark.parse.kernel import parse_files
 from boatrace_database_spark.silver import silver_tables
-from boatrace_database_spark.sources.bronze import read_txt_lines
+from boatrace_database_spark.sources.bronze import read_lines
 
 GLOB = "/root/reference/txt/*2008*.TXT"
 
 
 @pytest.fixture(scope="module")
 def both(spark):
-    bronze = read_txt_lines(spark, GLOB).persist()
-    parsed = parse_txt_files(spark, GLOB).persist()
+    bronze = read_lines(spark, GLOB).persist()
+    parsed = parse_files(spark, GLOB).persist()
     yield silver_tables_df(bronze), silver_tables(parsed)
     bronze.unpersist()
     parsed.unpersist()
@@ -77,12 +77,12 @@ def test_malformed_header_drops_section_in_both_paths(spark):
 # pluggable Spark 4 Python Data Source (sources/datasource.py)
 @pytest.mark.slow
 def test_boatrace_datasource_matches_kernel_path(spark):
-    from boatrace_database_spark.parse.kernel import parse_txt_files
+    from boatrace_database_spark.parse.kernel import parse_files
     from boatrace_database_spark.sources.datasource import register
 
     register(spark)
     ds = spark.read.format("boatrace").load(GLOB)
-    legacy = parse_txt_files(spark, GLOB)
+    legacy = parse_files(spark, GLOB)
     assert ds.schema == legacy.schema
     a = sorted(map(tuple, ds.collect()), key=repr)
     b = sorted(map(tuple, legacy.collect()), key=repr)
@@ -91,13 +91,13 @@ def test_boatrace_datasource_matches_kernel_path(spark):
 
 @pytest.mark.slow
 def test_boatrace_datasource_reads_lzh_archives(spark):
-    from boatrace_database_spark.parse.kernel import parse_lzh_files
+    from boatrace_database_spark.parse.kernel import parse_files
     from boatrace_database_spark.sources.datasource import register
 
     register(spark)
     glob_lzh = "/root/reference/lzh/*2020-08*.lzh"
     ds = spark.read.format("boatrace").load(glob_lzh)
-    legacy = parse_lzh_files(spark, glob_lzh)
+    legacy = parse_files(spark, glob_lzh)
     assert sorted(map(tuple, ds.collect()), key=repr) == sorted(
         map(tuple, legacy.collect()), key=repr
     )

@@ -17,7 +17,7 @@ import pytest
 
 from boatrace_database_spark import schemas as S
 from boatrace_database_spark.gold import race_table
-from boatrace_database_spark.parse.kernel import parse_txt_files
+from boatrace_database_spark.parse.kernel import parse_files
 from boatrace_database_spark.silver import silver_tables
 
 REF = "/root/reference"
@@ -49,7 +49,7 @@ def _read_golden(path: str, canon) -> list[tuple]:
 
 @pytest.fixture(scope="module")
 def aug_tables(spark):
-    parsed = parse_txt_files(spark, f"{REF}/txt/*2008*.TXT").persist()
+    parsed = parse_files(spark, f"{REF}/txt/*2008*.TXT").persist()
     tables = silver_tables(parsed)
     yield tables
     parsed.unpersist()
@@ -105,23 +105,3 @@ def test_silver_cardinalities(aug_tables):
     assert aug_tables["env"].count() == 4810
     assert aug_tables["result"].count() == 28473
     assert aug_tables["schedule"].count() == 27561
-
-
-def test_sectioned_parse_equals_whole_file(spark):
-    """The large-file scale path (per-venue-section split, SURVEY
-    §7.4(5)) is row-identical to the whole-file kernel on the full
-    committed month."""
-    from boatrace_database_spark.parse.kernel import (
-        parse_txt_files,
-        parse_txt_files_sectioned,
-    )
-
-    glob_pat = "/root/reference/txt/*2008*.TXT"
-    whole = sorted(
-        tuple(r) for r in parse_txt_files(spark, glob_pat).collect()
-    )
-    sectioned = sorted(
-        tuple(r) for r in parse_txt_files_sectioned(spark, glob_pat).collect()
-    )
-    assert len(whole) == len(sectioned)
-    assert whole == sectioned

@@ -200,10 +200,10 @@ def test_race_join_is_shuffle_free(spark):
     """The gold race join: AQE converts both joins to broadcast-hash —
     zero shuffle exchanges in the final plan."""
     from boatrace_database_spark.gold import race_table
-    from boatrace_database_spark.parse.kernel import parse_txt_files
+    from boatrace_database_spark.parse.kernel import parse_files
     from boatrace_database_spark.silver import silver_tables
 
-    parsed = parse_txt_files(spark, "/root/reference/txt/*200801.TXT").persist()
+    parsed = parse_files(spark, "/root/reference/txt/*200801.TXT").persist()
     t = silver_tables(parsed)
     race = race_table(t["result"], t["env"], t["schedule"])
     race.count()  # let AQE finalize

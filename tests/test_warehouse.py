@@ -207,11 +207,11 @@ def test_result_ext_typed_view(spark, wh):
     typed = result_ext_typed(tables["result_ext"])
     # F0.01 flying marks become booleans with their numeric ST kept
     # (2020-08-01 has no flying start; 2020-08-12 has five — SURVEY §2.4)
-    from boatrace_database_spark.parse.kernel import parse_txt_files
+    from boatrace_database_spark.parse.kernel import parse_files
     from boatrace_database_spark.silver import silver_tables
 
     day12 = silver_tables(
-        parse_txt_files(spark, "/root/reference/txt/*200812.TXT")
+        parse_files(spark, "/root/reference/txt/*200812.TXT")
     )["result_ext"]
     flying = result_ext_typed(day12).where(F.col("is_flying")).collect()
     assert flying and all(r.start_timing_s is not None for r in flying)
