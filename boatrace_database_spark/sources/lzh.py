@@ -286,7 +286,13 @@ def read_lzh(path: str) -> list[LzhMember]:
 
 
 def read_lzh_bytes(buf: bytes) -> list[LzhMember]:
-    """Parse an in-memory LZH container (for cluster-side binaryFile use)."""
+    """Parse an in-memory LZH container (for cluster-side binaryFile use).
+
+    A truncated archive raises ``ValueError`` instead of returning short
+    members: a member whose payload runs past the end of ``buf``, bytes
+    after the last member that are neither a whole header nor the
+    terminator, or a decoded member whose length differs from the
+    header's original size. The member CRC-16 is not checked."""
     members: list[LzhMember] = []
     pos = 0
     while pos + 21 < len(buf):
@@ -332,6 +338,11 @@ def read_lzh_bytes(buf: bytes) -> list[LzhMember]:
         else:
             raise ValueError(f"unsupported LZH header level {level}")
 
+        if data_start + packed > len(buf):
+            raise ValueError(
+                f"truncated LZH archive: member {name!r} needs "
+                f"{data_start + packed} bytes, the archive has {len(buf)}"
+            )
         payload = buf[data_start : data_start + packed]
         if method == "-lh0-":
             data = payload[:original]
@@ -339,6 +350,13 @@ def read_lzh_bytes(buf: bytes) -> list[LzhMember]:
             data = decode_lh5(payload, original)
         else:
             raise NotImplementedError(f"LZH method {method} not supported")
+        if len(data) != original:
+            raise ValueError(
+                f"corrupt LZH member {name!r}: decoded {len(data)} bytes, "
+                f"header says {original}"
+            )
         members.append(LzhMember(filename=name, method=method, data=data))
         pos = data_start + packed
+    if pos < len(buf) and buf[pos] != 0:
+        raise ValueError(f"truncated LZH header at byte {pos} of {len(buf)}")
     return members

@@ -67,12 +67,16 @@ why every TTL contract test is written that way.
 
 from __future__ import annotations
 
+import logging
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.types import StructType
 
 from boatrace_database_spark.timeutil import normalize_ts
+
+log = logging.getLogger(__name__)
 
 
 def _id_type(schema: StructType, col: str):
@@ -1792,10 +1796,17 @@ def stream_ingest_boatrace(
     """The reference's daily-append workflow (main.py:240-267) made
     incremental: a binaryFile stream watches for arriving daily TXT
     files; each micro-batch runs the fused decode+parse kernel and
-    upserts the day into every silver table plus the gold race join via
-    merge_upsert keyed on race_date — so a republished day REPLACES its
-    partition (idempotent) instead of duplicating it (the reference's
-    duplicate-append defect, SURVEY §2.4, cannot occur).
+    upserts the day into every silver table it holds rows for, plus the
+    gold race join, via merge_upsert keyed on race_date — a partition
+    replace, so a republished day REPLACES its partition (idempotent)
+    instead of duplicating it (the reference's duplicate-append defect,
+    SURVEY §2.4, cannot occur).
+
+    Per micro-batch, one inventory action — the distinct (table,
+    race_date) pairs of the parse, which also materializes the persisted
+    parse — decides which tables to write and which dates to rebuild in
+    gold; the gold inputs are read back with their known schemas, so no
+    schema-inference job runs.
 
     Exactly-once: the file source checkpoints which files each epoch
     consumed, and the partition-replace merge is idempotent per day, so
@@ -1830,11 +1841,9 @@ def stream_ingest_boatrace(
         return fs.exists(jpath)
 
     def _upsert(name: str, df: DataFrame) -> None:
-        # an empty frame (the day's other file kind hasn't arrived yet)
-        # must not create a footerless parquet dir the next read chokes
-        # on — and has nothing to merge anyway
-        if df.isEmpty():
-            return
+        # callers pass only frames known to hold rows: an empty first
+        # write would create a footerless parquet dir the next read
+        # chokes on
         tdir = f"{warehouse_dir}/{name}"
         if _exists(tdir):
             W.merge_upsert(spark, tdir, df, keys=["race_date"])
@@ -1842,30 +1851,37 @@ def stream_ingest_boatrace(
             df.write.partitionBy("race_date").parquet(tdir)
 
     def _ingest(batch: DataFrame, epoch_id: int) -> None:
-        if batch.isEmpty():
-            return
         parsed = parse_binary_df(batch).persist()
+        inventory = parsed.select("table", "race_date").distinct().collect()
+        present = {r["table"] for r in inventory}
+        dates = sorted({r["race_date"] for r in inventory})
+        log.info(
+            "stream_ingest_boatrace epoch %d: tables %s, dates %s",
+            epoch_id, sorted(present), dates,
+        )
         tables = silver_tables(parsed)
         for name in W.SILVER_TABLES:
-            _upsert(name, tables[name])
+            if name in present:
+                _upsert(name, tables[name])
         # rebuild gold for the touched dates from the MERGED silver, not
         # the batch frames: a day's K (results) and B (program) files
         # may arrive in different micro-batches, and the inner race join
         # needs both sides — joining only the batch's own rows would
         # silently drop the day whenever the pair splits across batches.
         # Until all three inputs exist on disk the join is empty anyway.
-        if all(
-            _exists(f"{warehouse_dir}/{n}") for n in ("result", "env", "schedule")
-        ):
-            dates = [r[0] for r in parsed.select("race_date").distinct().collect()]
+        gold_inputs = ("result", "env", "schedule")
+        if dates and all(_exists(f"{warehouse_dir}/{n}") for n in gold_inputs):
             silver = {
-                name: spark.read.parquet(f"{warehouse_dir}/{name}")
-                .withColumn("race_date", F.col("race_date").cast("string"))
+                name: spark.read.schema(tables[name].schema)
+                .parquet(f"{warehouse_dir}/{name}")
                 .where(F.col("race_date").isin(dates))
-                for name in ("result", "env", "schedule")
+                for name in gold_inputs
             }
             race = race_table(silver["result"], silver["env"], silver["schedule"])
-            _upsert("race", race)
+            # the join is empty while only one side of a split K/B pair
+            # has arrived
+            if not race.isEmpty():
+                _upsert("race", race)
         parsed.unpersist()
 
     return (

@@ -18,6 +18,7 @@ one-pass parse (the reference re-scans each K file 3x; SURVEY §4).
 
 from __future__ import annotations
 
+import logging
 import os
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -28,6 +29,8 @@ from boatrace_database_spark import gold, silver
 from boatrace_database_spark.parse import kernel
 
 SILVER_TABLES = ("schedule", "result", "odds", "env", "result_ext", "race_meta")
+
+log = logging.getLogger(__name__)
 
 
 def build_warehouse(
@@ -96,27 +99,54 @@ def merge_upsert(
 ) -> DataFrame:
     """MERGE-style upsert without a lake format: replace target rows
     whose key appears in `updates`, keep the rest, append the new ones
-    (anti-join + union). The use case is late corrections — the
-    official site occasionally republishes a day's results.
+    (anti-join + union). The use cases are the daily append (the stream
+    merges each arriving day keyed on race_date) and late corrections —
+    the official site occasionally republishes a day's results.
 
-    At scale this rewrites only the touched race_date partitions:
-    updates are sliced per partition value and each partition
-    overwrites independently (dynamic partition overwrite semantics).
+    Only the touched race_date partitions are rewritten (dynamic
+    partition overwrite); every other partition keeps its files.
+
+    ``keys == ["race_date"]`` is a partition replace: a key match is a
+    whole partition, so every target row in a touched partition is
+    superseded and the merged rows of those partitions are exactly the
+    update rows (a null race_date matches nothing and is dropped, as on
+    the general path). The updates are staged and written as they are —
+    no target read, no anti-join, no date collects, and no emptied
+    partition can exist because the written dates are the touched ones.
+
+    Any other key runs the general algorithm below, which also handles
+    a correction that moves rows to another partition and a partition
+    that a correction empties.
     """
+    table = os.path.basename(table_dir.rstrip("/"))
+    if keys == ["race_date"]:
+        # localCheckpoint materializes the rows BEFORE the overwrite
+        # deletes the files they may have been read from (updates derived
+        # from the target table itself)
+        staged = updates.where(F.col("race_date").isNotNull()).localCheckpoint(
+            eager=True
+        )
+        _overwrite_partitions(staged, table_dir)
+        spark.catalog.refreshByPath(table_dir)
+        log.info("merge_upsert %s: partition replace", table)
+        # the staged schema names every column: no schema-inference job
+        return (
+            spark.read.schema(staged.schema)
+            .parquet(table_dir)
+            .withColumn("race_date", F.col("race_date").cast("string"))
+        )
+
     target = spark.read.parquet(table_dir).withColumn(
         "race_date", F.col("race_date").cast("string")
     )
     merged = target.join(updates.select(*keys), on=keys, how="left_anti").unionByName(
         updates
     )
-    # touched partitions only — dynamic mode leaves the rest in place.
     # A key match may live in a DIFFERENT partition than its update row
     # (e.g. a correction moves a race to another date, or keys omit the
     # date), so the touched set is partitions holding update rows UNION
     # partitions holding superseded target rows — otherwise superseded
     # rows in unrewritten partitions would survive as duplicates.
-    # localCheckpoint materializes the merged rows BEFORE the overwrite
-    # deletes the source files they were read from.
     touched_df = updates.select("race_date")
     if "race_date" not in keys:
         # only possible when the merge key does not pin the partition:
@@ -127,17 +157,10 @@ def merge_upsert(
             .select("race_date")
         )
     touched = [r[0] for r in touched_df.distinct().collect()]
-    staged = (
-        merged.where(F.col("race_date").isin(touched)).localCheckpoint(eager=True)
+    staged = merged.where(F.col("race_date").isin(touched)).localCheckpoint(
+        eager=True
     )
-    # partitionOverwriteMode as a WRITER option, not session conf: it
-    # scopes dynamic overwrite to this single write — a session-level
-    # conf.set would silently leak, turning a later caller's
-    # mode("overwrite").partitionBy(...) full-table truncate into a
-    # partial one.
-    staged.write.mode("overwrite").option(
-        "partitionOverwriteMode", "dynamic"
-    ).partitionBy("race_date").parquet(table_dir)
+    _overwrite_partitions(staged, table_dir)
     # Dynamic mode only rewrites partitions PRESENT in the written data.
     # If an update moved every row out of a touched partition, staged has
     # zero rows for it and the stale directory survives — delete those
@@ -151,11 +174,28 @@ def merge_upsert(
                 f"{table_dir}/race_date={d}"
             )
             p.getFileSystem(hconf).delete(p, True)
+    log.info(
+        "merge_upsert %s: general merge on %s, %d touched, %d emptied partitions",
+        table, keys, len(touched), len(emptied),
+    )
     # drop the stale shared file-status cache for this path
     spark.catalog.refreshByPath(table_dir)
     return spark.read.parquet(table_dir).withColumn(
         "race_date", F.col("race_date").cast("string")
     )
+
+
+def _overwrite_partitions(staged: DataFrame, table_dir: str) -> None:
+    """Replace the race_date partitions present in ``staged``.
+
+    partitionOverwriteMode is a WRITER option, not session conf: it
+    scopes dynamic overwrite to this single write — a session-level
+    conf.set would silently leak, turning a later caller's
+    mode("overwrite").partitionBy(...) full-table truncate into a
+    partial one."""
+    staged.write.mode("overwrite").option(
+        "partitionOverwriteMode", "dynamic"
+    ).partitionBy("race_date").parquet(table_dir)
 
 
 def export_sqlite(

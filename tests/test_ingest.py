@@ -112,3 +112,69 @@ def test_build_txt_and_lzh_print_the_truth(spark, corpus, tmp_path):
     via_txt = _cli_build("--txt", f"{dirs['txt']}/*.TXT", str(tmp_path / "wh_txt"))
     via_lzh = _cli_build("--lzh", f"{dirs['lzh']}/*.lzh", str(tmp_path / "wh_lzh"))
     assert via_txt == via_lzh == expected
+
+
+STREAM_DAYS = 4
+
+
+def test_stream_day_replay_equals_batch_build(spark, tmp_path):
+    """Generated days through the streaming ingest, one micro-batch at a
+    time, end in the same 7 tables as the batch build over the same TXT
+    files. The first and last days arrive split, B (program) before K
+    (results) — the first split also starts from an empty warehouse —
+    and a republished K file under a subdirectory replaces its day."""
+    from pyspark.sql import functions as F
+
+    from boatrace_database_spark import warehouse as W
+    from boatrace_database_spark.streaming.ingest import stream_ingest_boatrace
+
+    txt, watch, stage = (tmp_path / n for n in ("txt", "watch", "stage"))
+    for d in (txt, watch, stage):
+        d.mkdir()
+    pool = gen.PlayerPool(SEED)
+    truths = []
+    for day in range(STREAM_DAYS):
+        k, b, truth = gen.generate_day(SEED, day, pool)
+        truths.append(truth)
+        for name, data in zip(gen.file_names(day), (k, b)):
+            (txt / name).write_bytes(data)
+
+    def arrive(name: str, sub: str = "") -> None:
+        # stage + rename: the stream must never list a half-written file
+        (watch / sub).mkdir(exist_ok=True)
+        (stage / name).write_bytes((txt / name).read_bytes())
+        os.replace(stage / name, watch / sub / name)
+
+    wh_stream = str(tmp_path / "wh_stream")
+    q = stream_ingest_boatrace(spark, str(watch), wh_stream, str(tmp_path / "ckpt"))
+    try:
+        for day in range(STREAM_DAYS):
+            k_name, b_name = gen.file_names(day)
+            split = day in (0, STREAM_DAYS - 1)
+            for name in (b_name, k_name):
+                arrive(name)
+                if split:
+                    q.processAllAvailable()
+            q.processAllAvailable()
+        arrive(gen.file_names(1)[0], sub="redo")
+        q.processAllAvailable()
+        # split days take two micro-batches each, the redo one more
+        assert sum(p["numInputRows"] > 0 for p in q.recentProgress) == STREAM_DAYS + 3
+    finally:
+        q.stop()
+
+    wh_batch = str(tmp_path / "wh_batch")
+    W.build_warehouse(spark, f"{txt}/*.TXT", wh_batch)
+
+    def rows(wh: str, name: str) -> Counter:
+        df = spark.read.parquet(f"{wh}/{name}")
+        return Counter(map(tuple, df.withColumn("race_date", F.col("race_date").cast("string")).collect()))
+
+    for name in (*W.SILVER_TABLES, "race"):
+        streamed = rows(wh_stream, name)
+        assert streamed == rows(wh_batch, name), name
+        per_day = Counter(r[-1] for r in streamed.elements())
+        want = {
+            t["date"]: t["gold_rows"] if name == "race" else t["rows"][name] for t in truths
+        }
+        assert per_day == want, name

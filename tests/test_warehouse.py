@@ -416,6 +416,98 @@ def test_merge_upsert_emptied_partition(spark, tmp_path):
     assert not os.path.exists(f"{env_dir}/race_date={victim}")
 
 
+def _day_table(spark, table: str, rows_per_day: dict[str, int]) -> None:
+    """A small race_date-partitioned table, one file per day."""
+    rows = [
+        (f"{d}-{i:02d}", f"v{i}", d) for d, n in rows_per_day.items() for i in range(n)
+    ]
+    df = spark.createDataFrame(rows, "id STRING, v STRING, race_date STRING")
+    df.repartition(1).write.partitionBy("race_date").parquet(table)
+
+
+def _files(table: str, day: str) -> dict[str, tuple[float, int]]:
+    part = os.path.join(table, f"race_date={day}")
+    return {
+        f: (os.stat(os.path.join(part, f)).st_mtime_ns, os.path.getsize(os.path.join(part, f)))
+        for f in os.listdir(part)
+    }
+
+
+def test_merge_upsert_race_date_is_partition_replace(spark, tmp_path, caplog):
+    """Keyed on race_date, a merge replaces each touched partition with
+    exactly the update rows: a republished day with FEWER rows leaves no
+    stale row behind, a null race_date is not written (it matches
+    nothing, as on the general path), untouched partitions keep their
+    files, and the returned frame reads like the general path's."""
+    from pyspark.sql import types as T
+
+    table = str(tmp_path / "t")
+    _day_table(spark, table, {"2020-08-01": 5, "2020-08-02": 5, "2020-08-03": 5})
+    before = spark.read.parquet(table).columns
+    untouched = {d: _files(table, d) for d in ("2020-08-01", "2020-08-03")}
+    updates = spark.createDataFrame(
+        [
+            ("2020-08-02-00", "new", "2020-08-02"),
+            ("2020-08-02-09", "new", "2020-08-02"),
+            ("2020-08-04-00", "new", "2020-08-04"),
+            ("orphan", "new", None),
+        ],
+        "id STRING, v STRING, race_date STRING",
+    )
+    with caplog.at_level("INFO", logger="boatrace_database_spark.warehouse"):
+        merged = W.merge_upsert(spark, table, updates, keys=["race_date"])
+    assert "t: partition replace" in caplog.text
+    assert merged.columns == before
+    assert merged.schema["race_date"].dataType == T.StringType()
+    got = sorted(tuple(r) for r in merged.collect())
+    want = sorted(
+        [(f"{d}-{i:02d}", f"v{i}", d) for d in ("2020-08-01", "2020-08-03") for i in range(5)]
+        + [tuple(r) for r in updates.where("race_date IS NOT NULL").collect()]
+    )
+    assert got == want
+    assert sorted(p for p in os.listdir(table) if p.startswith("race_date=")) == [
+        f"race_date=2020-08-0{d}" for d in (1, 2, 3, 4)
+    ]
+    assert {d: _files(table, d) for d in untouched} == untouched
+
+
+def test_merge_upsert_partition_replace_from_own_lineage(spark, tmp_path):
+    """Updates read from the very files the merge overwrites (no
+    checkpoint by the caller) still merge: the rows are staged before
+    the partition is replaced."""
+    table = str(tmp_path / "t")
+    _day_table(spark, table, {"2020-08-01": 4, "2020-08-02": 4})
+    updates = (
+        spark.read.parquet(table)
+        .withColumn("race_date", F.col("race_date").cast("string"))
+        .where(F.col("race_date") == "2020-08-02")
+        .withColumn("v", F.concat(F.col("v"), F.lit("!")))
+    )
+    merged = W.merge_upsert(spark, table, updates, keys=["race_date"])
+    got = sorted((r.id, r.v) for r in merged.where("race_date = '2020-08-02'").collect())
+    assert got == [(f"2020-08-02-{i:02d}", f"v{i}!") for i in range(4)]
+    assert merged.count() == 8
+
+
+def test_merge_upsert_other_keys_keep_the_general_merge(spark, tmp_path, caplog):
+    """Keyed on anything but race_date alone, the merge still finds
+    superseded rows in partitions the updates do not name: moving every
+    row of one day to another date empties (and deletes) its partition,
+    and the decision is logged with the partition counts."""
+    table = str(tmp_path / "t")
+    _day_table(spark, table, {"2020-08-01": 3, "2020-08-02": 3})
+    moved = spark.createDataFrame(
+        [(f"2020-08-01-{i:02d}", "moved", "2020-08-03") for i in range(3)],
+        "id STRING, v STRING, race_date STRING",
+    )
+    with caplog.at_level("INFO", logger="boatrace_database_spark.warehouse"):
+        merged = W.merge_upsert(spark, table, moved, keys=["id"])
+    assert "t: general merge on ['id'], 2 touched, 1 emptied partitions" in caplog.text
+    got = sorted((r.race_date, r.v) for r in merged.collect())
+    assert got == [("2020-08-02", f"v{i}") for i in range(3)] + [("2020-08-03", "moved")] * 3
+    assert not os.path.exists(os.path.join(table, "race_date=2020-08-01"))
+
+
 @pytest.mark.slow
 def test_compact_partitions_merges_small_files_only(spark, tmp_path):
     """Fragmented partitions collapse to the byte-sized file count with
