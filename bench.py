@@ -163,10 +163,13 @@ def main() -> None:
         "loadavg_start": round(os.getloadavg()[0], 2),
         "idle_waited_sec": round(idle_waited, 1),
         "ref_query_sec": round(min(_ref_query() for _ in range(3)), 3),
+        # the boatrace timing lines below need the reference corpus;
+        # without it they are absent, and this says why
+        "reference_corpus": os.path.exists("/root/reference/txt"),
     }
 
     timings: dict[str, float] = {}
-    if os.path.exists("/root/reference/txt"):
+    if host["reference_corpus"]:
         from boatrace_database_spark.parse.kernel import parse_files
 
         parse_files(spark, "/root/reference/txt/K200801.TXT").count()

@@ -1,29 +1,33 @@
-"""Per-file parse kernel: CP932 lines -> tagged silver rows, one pass.
+"""Per-file parse kernel: CP932 lines -> tagged silver rows, one walk.
 
 ``parse_file`` re-implements the reference state machine
-(main.py:126-218) with the same observable semantics, in one pass:
+(main.py:126-218) with the same observable semantics, as one loop over
+the lines:
 
 - the reference scans each K file THREE times (result/env/odds,
-  main.py:249-252); this kernel derives every table from one scan
+  main.py:249-252); this kernel derives every table from one walk
   (SURVEY §4 "redundant-scan elimination"),
-- per-line record patterns (schedule/result/env/...) run as plain
-  ``re`` loops behind a cheap substring pretest per line,
-- only the genuinely sequential parts walk line by line: the section
-  header lookahead (name at +2 lines, venue at +4 — main.py:139-156)
-  and the 10-line odds stanza cursor (main.py:166-185). Both touch a
-  handful of lines per race section.
+- the walk holds the current section's race name and venue, its race
+  counter and the end of the header's lookahead window; there are no
+  separate per-table or per-mask passes over the file,
+- each record pattern (schedule/result/env/...) runs behind a cheap
+  substring pretest, and rows are appended to one list per table.
 
 Faithfulness notes (SURVEY §2.4 is the spec):
-- lines h+1..h+3 after a section header are consumed unprocessed (the
-  reference's ``f.readline()`` lookahead); the venue line h+4 IS
-  re-processed for markers/records, exactly like the reference where
-  ``line`` still holds it after the lookahead,
-- the odds stanza consumes 9 lines after the anchor (複勝1/複勝2 share
-  a line); unmatched payouts become ``-1``; a レース不成立 line yields
-  ten ``-1`` and consumes nothing,
+- a section header takes its name from line h+2 and its venue from
+  h+4 (main.py:139-156); lines h+1..h+3 are consumed unprocessed (the
+  reference's ``f.readline()`` lookahead), and the venue line h+4 IS
+  processed for markers/records, exactly like the reference where
+  ``line`` still holds it after the lookahead. The header test runs on
+  every line, consumed or not. A section whose name or venue is
+  missing emits no rows, nor do records before the first header,
+- the odds stanza reads the 9 lines after the anchor by position,
+  consumed or not (複勝1/複勝2 share a line, main.py:166-185);
+  unmatched payouts become ``-1``; a レース不成立 line yields ten ``-1``,
 - result ranks only match the ``0d`` shape — F/L0/S0-S2/K0 rows drop,
 - race_num increments on distance markers (half-width ``H1800m`` in K
-  files, full-width in B files) and resets at each section header.
+  files, full-width in B files) and resets at each section header; a
+  marker line counts toward its own race id, the header line never.
 
 One ingest path: ``parse_bytes`` is the only place raw file bytes
 become tagged parsed rows (``sources/bronze.decode_file`` expands
@@ -38,7 +42,6 @@ from __future__ import annotations
 
 from collections.abc import Iterator
 
-import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
@@ -59,11 +62,60 @@ PARSED_SCHEMA = T.StructType(
 
 _N_ODDS = len(P.ODDS_STANZA)
 
+# Tables in output order per file kind; any other kind emits nothing.
+_TABLES = {
+    "K": ("result", "env", "result_ext", "race_meta", "odds"),
+    "B": ("schedule",),
+}
+
+
+def _result_ext(line: str) -> list[str]:
+    """result_ext (extension): every per-boat line incl. disqualification
+    codes, with the fields the parity regex drops (motor/boat no, entry
+    course, start timing, race time) — fixed-width tail slice."""
+    tail = line.rstrip("\n")[P.RESULT_EXT_TAIL_START:]
+    return [
+        line[2:4].strip(),        # rank_code (01-06/F/L0/L1/S0-S2/K0/K1)
+        line[6],                  # lane
+        line[8:12],               # player_id
+        line[13:21].strip("　"),  # player_name (full-width padded)
+        tail[0:4].strip(),        # motor_no
+        tail[4:9].strip(),        # boat_no
+        tail[9:15].strip(),       # exhibition
+        tail[15:19].strip(),      # entry_course
+        tail[19:28].strip(),      # start_timing
+        tail[28:40].strip(),      # race_time
+    ]
+
+
+def _kimarite(line: str) -> list[str]:
+    """race_meta (extension): winning technique from the column-header
+    line (text after the ﾚｰｽﾀｲﾑ label, full-width padding stripped)."""
+    line = line.rstrip("\n")
+    pos = line.find(P.KIMARITE_ANCHOR)
+    tail = line[pos + len(P.KIMARITE_ANCHOR):] if pos >= 0 else ""
+    return [tail.strip().strip("　")]
+
+
+def _odds(lines: list[str], i: int) -> list[str]:
+    """The ten payouts of the stanza anchored at line ``i``, read by
+    position whether or not the stanza lines were consumed; an unmatched
+    (or missing) line gives ``-1``, a レース不成立 anchor ten ``-1``."""
+    if P.CANCELLED in lines[i]:
+        return ["-1"] * _N_ODDS
+    row: list[str] = []
+    for k, pat in enumerate(P.ODDS_STANZA):
+        m = pat.match(lines[i]) if i < len(lines) else None
+        row.append(m.group(1) if m else "-1")
+        if k != 1:  # 複勝1 and 複勝2 share one line (main.py:184)
+            i += 1
+    return row
+
 
 def parse_file(lines: list[str], kind: str, race_date: str) -> pd.DataFrame:
     """Parse one decoded file's lines into (table, race_id, vals) rows.
 
-    Pure pandas/numpy — unit-testable without Spark.
+    Pure Python/pandas — unit-testable without Spark.
 
     Lines must behave like the reference's ``f.readline()`` output, which
     keeps the trailing newline — RACE_PLACE's closing ``\\s`` depends on
@@ -72,217 +124,63 @@ def parse_file(lines: list[str], kind: str, race_date: str) -> pd.DataFrame:
     """
     lines = [l if l.endswith("\n") else l + "\n" for l in lines]
     n = len(lines)
+    rows: dict[str, list[tuple]] = {t: [] for t in _TABLES.get(kind, ())}
 
-    # Every full-line scan below is a plain re loop behind a cheap
-    # substring PRETEST that the pattern itself implies (a literal the
-    # regex must contain), so the regex only runs on candidate lines.
-    # pandas str.extract/contains are object loops over re.search under
-    # the hood, and the unanchored searches (ODDS_ANCHOR especially: 9x
-    # this file's whole parse) re-scan every start position of every
-    # line — measured 1.44 s -> ~0.5 s per month of files (guide §4.2;
-    # byte-golden parity pinned by tests/test_parse_golden.py).
-    is_header = np.fromiter(
-        ("＊" in l and P.SECTION_HEADER.match(l) is not None for l in lines),
-        dtype=bool,
-        count=n,
-    )
-    header_idx = np.flatnonzero(is_header)
-
-    # --- sequential context: race name / venue via fixed lookahead -------
-    processed = np.ones(n, dtype=bool)
-    names = np.empty(n, dtype=object)
-    places = np.empty(n, dtype=object)
-    names[:] = None
-    places[:] = None
-    bounds = list(header_idx) + [n]
-    for i, h in enumerate(header_idx):
-        processed[h + 1 : min(h + 4, n)] = False  # lookahead-consumed lines
-        name = place = None
-        if h + 2 < n:
-            m = P.RACE_NAME.match(lines[h + 2])
+    # Each unanchored search runs behind a cheap substring PRETEST that
+    # the pattern itself implies (a literal the regex must contain): such
+    # a search re-scans every start position of every line, and the
+    # pretest measured 26x on the odds anchor alone (byte-golden parity
+    # pinned by tests/test_parse_golden.py and tests/test_kernel.py).
+    section = place = None  # race-id prefix and venue of the current section
+    race_num = 0
+    consumed_to = -1  # last line of the latest header's lookahead
+    for i, line in enumerate(lines):
+        consumed = i <= consumed_to
+        if "＊" in line and P.SECTION_HEADER.match(line):
+            # fixed lookahead (main.py:139-156): name at +2, venue at +4;
+            # lines +1..+3 are consumed, +4 is processed as usual. The
+            # header test also runs on consumed lines.
+            m = P.RACE_NAME.match(lines[i + 2]) if i + 2 < n else None
             name = m.group(1) if m else None
-        if h + 4 < n:
-            m = P.RACE_PLACE.search(lines[h + 4])
+            m = P.RACE_PLACE.search(lines[i + 4]) if i + 4 < n else None
             place = m.group(1) if m else None
-        names[h : bounds[i + 1]] = name
-        places[h : bounds[i + 1]] = place
+            # a section missing either emits nothing (the reference
+            # would crash there); so do records before any header
+            section = f"{race_date}{place}{name}" if name and place else None
+            race_num = 0
+            consumed_to = i + 3
+        elif consumed:
+            continue
+        # race counter (P4): distance markers, both alternatives of which
+        # require a literal H/Ｈ; the header line itself never counts
+        elif ("H" in line or "Ｈ" in line) and P.DISTANCE_MARKER.search(line):
+            race_num += 1
+        if consumed or section is None:
+            continue
+        race_id = f"{section}{race_num}R"
+        if kind == "K":
+            # result ranks are a literal "0" + digit; ENV needs 風
+            if "0" in line and (m := P.RESULT.search(line)):
+                rows["result"].append(("result", race_id, list(m.groups())))
+            if "風" in line and (m := P.ENV.search(line)):
+                rows["env"].append(("env", race_id, [*m.groups(), place]))
+            if P.RESULT_EXT_HEAD.match(line):
+                rows["result_ext"].append(("result_ext", race_id, _result_ext(line)))
+            if P.RACE_META_LINE.match(line):
+                rows["race_meta"].append(("race_meta", race_id, _kimarite(line)))
+            if ("単勝" in line or P.CANCELLED in line) and P.ODDS_ANCHOR.search(line):
+                rows["odds"].append(("odds", race_id, _odds(lines, i)))
+        # SCHEDULE is ^-anchored on [1-6], so the first char decides
+        elif kind == "B" and line[0] in "123456" and (m := P.SCHEDULE.match(line)):
+            rows["schedule"].append(("schedule", race_id, list(m.groups())))
 
-    # --- running race counter (P4): markers reset per section ------------
-    # pretest: both DISTANCE_MARKER alternatives require a literal H/Ｈ
-    is_marker = (
-        np.fromiter(
-            (
-                ("H" in l or "Ｈ" in l)
-                and P.DISTANCE_MARKER.search(l) is not None
-                for l in lines
-            ),
-            dtype=bool,
-            count=n,
-        )
-        & processed
+    # object dtypes even when empty, or Arrow can't map the vals column
+    # to list<string>
+    return pd.DataFrame(
+        [r for table in rows.values() for r in table],
+        columns=["table", "race_id", "vals"],
+        dtype=object,
     )
-    marker_cum = np.cumsum(is_marker)
-    base = np.zeros(n, dtype=np.int64)
-    for i, h in enumerate(header_idx):
-        base[h : bounds[i + 1]] = marker_cum[h]
-    race_num = marker_cum - base
-
-    def race_ids(idx: np.ndarray) -> np.ndarray:
-        return np.array(
-            [
-                f"{race_date}{places[j]}{names[j]}{race_num[j]}R"
-                for j in idx
-            ],
-            dtype=object,
-        )
-
-    frames: list[pd.DataFrame] = []
-
-    def emit(table: str, idx: np.ndarray, vals: list[list[str]]) -> None:
-        # records before any section header have no race context (the
-        # reference would crash there — NameError on race_place); drop
-        # them instead of emitting garbage ids
-        keep = [k for k, j in enumerate(idx) if names[j] is not None and places[j] is not None]
-        if keep:
-            idx = idx[keep]
-            vals = [vals[k] for k in keep]
-            frames.append(
-                pd.DataFrame(
-                    {"table": table, "race_id": race_ids(idx), "vals": vals}
-                )
-            )
-
-    if kind == "K":
-        # result: per-boat finish lines (pretest: the rank is a literal
-        # "0" + digit, so any matching line contains "0")
-        res_m = [P.RESULT.search(l) if "0" in l else None for l in lines]
-        hit = (
-            np.fromiter((m is not None for m in res_m), dtype=bool, count=n)
-            & processed
-        )
-        idx = np.flatnonzero(hit)
-        emit("result", idx, [list(res_m[j].groups()) for j in idx])
-
-        # env: the race-header line carries the weather payload
-        # (pretest: the pattern requires a literal 風)
-        env_m = [P.ENV.search(l) if "風" in l else None for l in lines]
-        hit = (
-            np.fromiter((m is not None for m in env_m), dtype=bool, count=n)
-            & processed
-        )
-        idx = np.flatnonzero(hit)
-        vals = [[*env_m[j].groups(), places[j] or ""] for j in idx]
-        emit("env", idx, vals)
-
-        # result_ext (extension): every per-boat line incl. disqualification
-        # codes, with the fields the parity regex drops (motor/boat no,
-        # entry course, start timing, race time) — fixed-width tail slice
-        ext_hit = (
-            np.fromiter(
-                (P.RESULT_EXT_HEAD.match(l) is not None for l in lines),
-                dtype=bool,
-                count=n,
-            )
-            & processed
-        )
-        ext_idx = np.flatnonzero(ext_hit)
-        ext_vals = []
-        for j in ext_idx:
-            line = lines[j]
-            t0 = P.RESULT_EXT_TAIL_START
-            tail = line.rstrip("\n")[t0:]
-            ext_vals.append(
-                [
-                    line[2:4].strip(),        # rank_code (01-06/F/L0/L1/S0-S2/K0/K1)
-                    line[6],                  # lane
-                    line[8:12],               # player_id
-                    line[13:21].strip("　"),  # player_name (full-width padded)
-                    tail[0:4].strip(),        # motor_no
-                    tail[4:9].strip(),        # boat_no
-                    tail[9:15].strip(),       # exhibition
-                    tail[15:19].strip(),      # entry_course
-                    tail[19:28].strip(),      # start_timing
-                    tail[28:40].strip(),      # race_time
-                ]
-            )
-        emit("result_ext", ext_idx, ext_vals)
-
-        # race_meta (extension): winning technique from the column-header
-        # line (text after the ﾚｰｽﾀｲﾑ label, full-width padding stripped)
-        meta_hit = (
-            np.fromiter(
-                (P.RACE_META_LINE.match(l) is not None for l in lines),
-                dtype=bool,
-                count=n,
-            )
-            & processed
-        )
-        meta_idx = np.flatnonzero(meta_hit)
-        meta_vals = []
-        for j in meta_idx:
-            line = lines[j].rstrip("\n")
-            pos = line.find(P.KIMARITE_ANCHOR)
-            tail = line[pos + len(P.KIMARITE_ANCHOR):] if pos >= 0 else ""
-            meta_vals.append([tail.strip().strip("　")])
-        emit("race_meta", meta_idx, meta_vals)
-
-        # odds: per-anchor positional stanza walk (sequential by design).
-        # The unanchored alternation search was the single most
-        # expensive pass of the whole kernel (it rescans every start
-        # position of every line); both alternatives require one of two
-        # literals, so the pretest is exact — measured 26x on this pass.
-        anchor_hit = (
-            np.fromiter(
-                (
-                    ("単勝" in l or P.CANCELLED in l)
-                    and P.ODDS_ANCHOR.search(l) is not None
-                    for l in lines
-                ),
-                dtype=bool,
-                count=n,
-            )
-            & processed
-        )
-        odds_idx = np.flatnonzero(anchor_hit)
-        odds_vals: list[list[str]] = []
-        for i0 in odds_idx:
-            if P.CANCELLED in lines[i0]:
-                odds_vals.append(["-1"] * _N_ODDS)
-                continue
-            row: list[str] = []
-            j = int(i0)
-            for k, pat in enumerate(P.ODDS_STANZA):
-                m = pat.match(lines[j]) if j < n else None
-                row.append(m.group(1) if m else "-1")
-                if k != 1:  # 複勝1 and 複勝2 share one line (main.py:184)
-                    j += 1
-            odds_vals.append(row)
-        emit("odds", odds_idx, odds_vals)
-
-    elif kind == "B":
-        # pretest: SCHEDULE is ^-anchored on [1-6] (no re.M, lines hold
-        # no inner newlines), so the first char decides candidacy
-        sch_m = [
-            P.SCHEDULE.match(l) if l[0] in "123456" else None for l in lines
-        ]
-        hit = (
-            np.fromiter((m is not None for m in sch_m), dtype=bool, count=n)
-            & processed
-        )
-        idx = np.flatnonzero(hit)
-        emit("schedule", idx, [list(sch_m[j].groups()) for j in idx])
-
-    if not frames:
-        # dtypes must be object, not float64, or Arrow can't map the
-        # empty vals column to list<string>
-        return pd.DataFrame(
-            {
-                "table": pd.Series(dtype="object"),
-                "race_id": pd.Series(dtype="object"),
-                "vals": pd.Series(dtype="object"),
-            }
-        )
-    return pd.concat(frames, ignore_index=True)
 
 
 def parse_bytes(path: str, content: bytes) -> Iterator[pd.DataFrame]:

@@ -74,24 +74,20 @@ def read_lines(spark: SparkSession, path_glob: str) -> DataFrame:
     return binary.mapInPandas(_line_batches, schema=BRONZE_LINES_SCHEMA)
 
 
-def decompress_lzh_to_dir(
-    lzh_paths: list[str], out_dir: str, normalize_newlines: bool = True
-) -> list[str]:
+def decompress_lzh_to_dir(lzh_paths: list[str], out_dir: str) -> list[str]:
     """Driver-side LZH expansion (reference main.py:89-100), using the
     bundled pure-Python -lh5- decoder (sources/lzh.py) — no external
     package needed.
 
     The official archives store CRLF line endings while the committed
-    ``txt/`` corpus is LF; ``normalize_newlines`` (default) reproduces
-    the committed bytes.
+    ``txt/`` corpus is LF; CRLF becomes LF so the written files
+    reproduce the committed bytes.
     """
     os.makedirs(out_dir, exist_ok=True)
     written: list[str] = []
     for path in lzh_paths:
         for member in read_lzh(path):
-            data = member.data
-            if normalize_newlines:
-                data = data.replace(b"\r\n", b"\n")
+            data = member.data.replace(b"\r\n", b"\n")
             target = os.path.join(out_dir, os.path.basename(member.filename))
             with open(target, "wb") as fh:
                 fh.write(data)

@@ -15,8 +15,8 @@ Registration is per-session: ``register(spark)`` (idempotent).
 
 Packing: file listing happens once at planning time on the driver
 (exactly like Spark's built-in file sources); executors must see the
-same filesystem. ``files_per_task`` (default 16) sets how many files
-one task reads.
+same filesystem. Each task reads ``FILES_PER_TASK`` consecutive files
+of the sorted listing.
 """
 
 from __future__ import annotations
@@ -34,6 +34,7 @@ from pyspark.sql.pandas.types import to_arrow_schema
 from boatrace_database_spark.parse.kernel import PARSED_SCHEMA, parse_bytes
 
 _ARROW_SCHEMA = to_arrow_schema(PARSED_SCHEMA)
+FILES_PER_TASK = 16
 
 
 class _FilesPartition(InputPartition):
@@ -49,15 +50,11 @@ class BoatraceReader(DataSourceReader):
         self.files = sorted(_glob.glob(path))
         if not self.files:
             raise ValueError(f"boatrace source matched no files: {path}")
-        self.files_per_task = int(options.get("files_per_task", "16"))
-        if self.files_per_task < 1:
-            raise ValueError("files_per_task must be >= 1")
 
     def partitions(self) -> list[InputPartition]:
-        n = self.files_per_task
         return [
-            _FilesPartition(self.files[i : i + n])
-            for i in range(0, len(self.files), n)
+            _FilesPartition(self.files[i : i + FILES_PER_TASK])
+            for i in range(0, len(self.files), FILES_PER_TASK)
         ]
 
     def read(self, partition: _FilesPartition) -> Iterator:

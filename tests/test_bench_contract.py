@@ -24,7 +24,6 @@ def _max_width_payload() -> dict:
     # every timing at a worst-case width (xxx.xxx -> 7 chars)
     keys = list(bench.HEADLINE) + [
         "boatrace_month_e2e",
-        "boatrace_month_sectioned",
         "boatrace_year_from_lzh",
         "ann_ivf_build",
         "ann_ivfpq_build",
@@ -55,6 +54,7 @@ def _max_width_payload() -> dict:
         "loadavg_start": 99.99,
         "idle_waited_sec": 999.9,
         "ref_query_sec": 99.999,
+        "reference_corpus": False,
         "loadavg_end": 99.99,
     }
     return {

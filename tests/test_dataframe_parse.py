@@ -110,7 +110,7 @@ def test_boatrace_datasource_sql_and_packing(spark):
     # pure-SQL consumption: the format is a catalog citizen
     spark.sql(
         "CREATE OR REPLACE TEMPORARY VIEW br_raw "
-        f"USING boatrace OPTIONS (path '{GLOB}', files_per_task '4')"
+        f"USING boatrace OPTIONS (path '{GLOB}')"
     )
     n = spark.sql(
         "SELECT count(*) AS n FROM br_raw WHERE table = 'result'"
@@ -125,13 +125,9 @@ def test_boatrace_datasource_sql_and_packing(spark):
     t = silver_tables(spark.table("br_raw"))
     race = race_table(t["result"], t["env"], t["schedule"])
     assert race.where(race["race_date"] == "2020-08-01").count() == 854
-    # files_per_task drives the partition count: 62 files / 4 -> 16
-    df = (
-        spark.read.format("boatrace")
-        .option("files_per_task", "4")
-        .load(GLOB)
-    )
-    assert df.rdd.getNumPartitions() == 16
+    # FILES_PER_TASK drives the partition count: 62 files / 16 -> 4
+    df = spark.read.format("boatrace").load(GLOB)
+    assert df.rdd.getNumPartitions() == 4
 
 
 def test_boatrace_datasource_guards(spark):
